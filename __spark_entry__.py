@@ -44,10 +44,15 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def _spread(df: DataFrame) -> DataFrame:
     """Parallelism guard for heavy per-row compute over the testdata
     parquet files, which are single-row-group (one scan task regardless
-    of size). No-op whenever the scan already has enough splits."""
-    from rdf_i2b2_converter_spark.operators.spread import spread_input
+    of size): round-robin repartition a bare scan up to the session's
+    default parallelism, right after the read and BEFORE the per-row
+    expressions. No-op whenever the scan already has enough splits.
 
-    return spread_input(df)
+    Call it on a bare scan only: ``getNumPartitions()`` on a file scan
+    lists splits without running a job, whereas on a plan with an
+    Exchange it would materialize the upstream stages under AQE."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    return df if df.rdd.getNumPartitions() >= n else df.repartition(n)
 
 
 # --------------------------------------------------------------------------
@@ -704,7 +709,7 @@ FROM events
 def _t_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rdf_i2b2_converter_spark.operators.dedup import exact_dedup
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = _spread(_t(spark, sf_dir, "documents"))
     return exact_dedup(docs, "text", "doc_id").select("doc_id")
 
 
@@ -854,7 +859,7 @@ FROM sh
 def _t_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rdf_i2b2_converter_spark.operators.dedup import lsh_candidate_pairs
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = _spread(_t(spark, sf_dir, "documents"))
     return lsh_candidate_pairs(docs, "doc_id", "text", k=3, n_hashes=4, n_bands=2)
 
 
@@ -1067,8 +1072,8 @@ FROM events GROUP BY 1, 2
 
 def _e5_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization: lag + cumulative gap-count per user (30-min gap).
-    The window-composition pattern the streaming side uses via
-    session_window; here in batch with an explicit oracle."""
+    The window-composition pattern of session_window, here in batch with
+    an explicit oracle."""
     ev = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # parquet carries TIMESTAMP_NTZ; go through timestamp (session TZ = UTC)
@@ -1170,7 +1175,7 @@ def _t_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     halves so neither side trips signed/unsigned casts."""
     from rdf_i2b2_converter_spark.operators.dedup import simhash64
 
-    docs = _spread(_t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200))
+    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     sim = simhash64(docs, "text", hash_fn="md5")
     return sim.select(
         "doc_id",
@@ -1497,7 +1502,7 @@ def _a1c_rdfxml_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     src/utils.py:58-63): synthesize a deterministic .rdf from the nation
     table (typed node elements, property attributes, rdf:resource
     shortcuts, typed + lang literals), parse it with the engine's expat
-    streaming reader, return the triples."""
+    SAX reader, return the triples."""
     import os
     import tempfile
 
@@ -1721,7 +1726,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "s_embed_neardup": _s_embed_neardup,
         "s_ann_index": _s_ann_index,
         "s_ivf_topk": _s_ivf_topk,
-        # streaming-analog windowed agg (J)
+        # windowed agg (J)
         "j_windowed_counts": _j_windowed_counts,
         # rows-only (non-SQL-expressible)
         "t_simhash": _t_simhash,

@@ -47,13 +47,6 @@ def _union_find_rows(pairs) -> list[tuple[str, str]]:
     return rows
 
 
-def _driver_union_find(e: DataFrame) -> DataFrame:
-    """Collected union-find over an edge DataFrame; returned as a
-    (broadcastable) mapping DataFrame. Only for sub-threshold edge sets."""
-    rows = _union_find_rows((r["u"], r["v"]) for r in e.collect())
-    return e.sparkSession.createDataFrame(rows, "id string, component string")
-
-
 def _min_neighbor(e: DataFrame) -> DataFrame:
     return e.groupBy("u").agg(F.min("v").alias("mv")).select(
         "u", F.least(F.col("mv"), F.col("u")).alias("m")
@@ -107,13 +100,13 @@ def connected_components(
     driver-synchronous Spark rounds cost far more than collecting a few MB.
     Large graphs run the distributed large-star/small-star loop.
     """
-    # r6 fast path: ONE capped, shuffle-free collect of the raw edges.
+    # ONE capped, shuffle-free collect of the raw edges decides the path.
     # When it returns fewer rows than the cap we hold the WHOLE edge set,
     # so the documented threshold criterion (symmetrized-distinct row
     # count vs 2x driver_threshold) is evaluated exactly, in Python, and
     # the sub-threshold case never launches a shuffle at all. A raw edge
-    # list bigger than the cap falls through to the Spark path below
-    # unchanged (the discarded head costs one bounded collect).
+    # list that fills the cap (hence non-empty) takes the distributed path
+    # below (the discarded head costs one bounded collect).
     cap = 2 * driver_threshold + 1
     head = (
         edges.select(F.col("src_id").alias("u"), F.col("dst_id").alias("v"))
@@ -130,30 +123,14 @@ def connected_components(
             )
 
     # symmetrize WITH self-loops kept: a node whose only edges are
-    # self-loops must still appear in the mapping (review r5), and keeping
-    # the loop rows here lets the sub-threshold driver path derive EVERY
-    # endpoint from one collect instead of re-scanning the input for a
-    # distinct-nodes table and anti-joining it (r6: the old shape cost
-    # three extra Spark jobs per call). The star loop below still requires
-    # loop-free edges; they are filtered on that branch only.
+    # self-loops must still appear in the mapping (review r5) through
+    # raw_nodes; the star loop itself requires loop-free edges.
     e_all = (
         edges.select(F.col("src_id").alias("u"), F.col("dst_id").alias("v"))
         .unionByName(edges.select(F.col("dst_id").alias("u"), F.col("src_id").alias("v")))
         .distinct()
-        .localCheckpoint(eager=False)  # lazy: materialized by the count
+        .localCheckpoint(eager=False)  # lazy: materialized by round 1
     )
-    n_edges = e_all.count()
-    if n_edges == 0:
-        return edges.sparkSession.createDataFrame([], "id string, component string")
-    # e_all is SYMMETRIZED (both directions), so compare against 2x the
-    # documented per-input-edge threshold (review r5: the cutoff was
-    # silently half of what callers tuned; self-loop rows now count once —
-    # a path-choice detail only, both paths compute the same mapping)
-    if n_edges < 2 * driver_threshold:
-        # one cached-RDD collect; _driver_union_find registers self-loop
-        # endpoints via find(), so the mapping is complete without a
-        # separate singles pass
-        return _driver_union_find(e_all)
     raw_nodes = e_all.select(F.col("u").alias("id")).distinct()
     # no second checkpoint: the filter reads the cached e_all partitions
     # and round 1 of the star loop checkpoints its own output

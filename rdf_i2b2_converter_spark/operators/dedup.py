@@ -17,7 +17,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import _let, fingerprint, normalized_text, shingles, tokens
-from .spread import spread_input
 
 _LOG = logging.getLogger(__name__)
 
@@ -41,7 +40,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     in ONE group — silently dropping every null-text document but one as
     'duplicates' with no comparable content."""
     cols = df.columns
-    df = spread_input(df)  # single-split inputs serialize the md5 scan
     with_fp = df.withColumn("__fp", fingerprint(F.col(text_col)))
     kept = (
         with_fp.filter(F.col("__fp").isNotNull())
@@ -179,7 +177,7 @@ def lsh_candidate_pairs(
             "(rows_per_band = n_hashes / n_bands)"
         )
     rows_per_band = n_hashes // n_bands
-    sig = minhash_signature(spread_input(df), text_col, k, n_hashes, scheme=scheme).select(
+    sig = minhash_signature(df, text_col, k, n_hashes, scheme=scheme).select(
         id_col, "minhash"
     )
     # materialize before the self-join: joining on COMPUTED columns makes

@@ -101,19 +101,9 @@ class TokenAhoCorasick:
 # different surface lists and silently reuse the wrong automaton; id(bc.
 # value) is likewise unsafe since CPython reuses id() values after GC).
 # Capacity 2: a long-lived executor serving alternating gazetteers (two
-# streams, A/B jobs) keeps both automatons instead of rebuilding the
+# pipelines, A/B jobs) keeps both automatons instead of rebuilding the
 # pure-Python trie on every switch.
 _AC_CACHE: dict[tuple[str, ...], TokenAhoCorasick] = {}
-
-
-def broadcast_surfaces(gazetteer: DataFrame):
-    """Collect + broadcast the gazetteer's distinct surfaces ONCE for
-    reuse across detect_mentions calls — a per-micro-batch stream sink
-    would otherwise re-collect and re-broadcast every epoch and leak one
-    Broadcast per trigger (review r5)."""
-    spark = gazetteer.sparkSession
-    surfaces = sorted({r[0] for r in gazetteer.select("surface").collect()})
-    return spark.sparkContext.broadcast(surfaces)
 
 
 def detect_mentions(
@@ -123,7 +113,6 @@ def detect_mentions(
     repartition_to: int | None = None,
     passthrough_cols: tuple[str, ...] = (),
     counter=None,
-    surfaces_bc=None,
 ) -> DataFrame:
     """pages(text/url) x gazetteer(surface) -> MENTIONS(url, surface,
     begin_pos, end_pos, n_occurrences [, passthrough...]). Token positions
@@ -145,13 +134,10 @@ def detect_mentions(
     Spark accumulator used for metrics).
     """
     spark = pages.sparkSession
-    if surfaces_bc is not None:
-        bc = surfaces_bc  # caller-managed reuse (streaming sinks)
-    else:
-        # dedupe driver-side: a distinct() over a dozen surfaces would spin
-        # up a whole shuffle stage for nothing
-        surfaces = sorted({r[0] for r in gazetteer.select("surface").collect()})
-        bc = spark.sparkContext.broadcast(surfaces)
+    # dedupe driver-side: a distinct() over a dozen surfaces would spin up a
+    # whole shuffle stage for nothing
+    surfaces = sorted({r[0] for r in gazetteer.select("surface").collect()})
+    bc = spark.sparkContext.broadcast(surfaces)
     if repartition_to:
         pages = pages.repartition(repartition_to)
     split_re = re.compile(TOKEN_SPLIT_REGEX)

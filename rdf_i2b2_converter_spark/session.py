@@ -2,7 +2,8 @@
 
 Local-mode knobs mirror what we would set on a real cluster:
 - AQE on (runtime coalescing + skew-join splitting) — the engine's answer to
-  head-entity skew at 100 TB, alongside explicit salting (operators/skew.py).
+  head-entity skew at 100 TB, alongside explicit salting
+  (operators/canonicalize.salt_keys).
 - shuffle.partitions ~ cores locally; on a 1000-executor cluster this is set
   to 2-3x total cores (AQE coalesces down).
 - Arrow enabled: every Python-side operator in this engine is vectorized
@@ -61,7 +62,7 @@ def get_spark(
         # local file otherwise yields 1-4 scan tasks; at cluster scale file
         # counts exceed any core count and this is a no-op. Splits still
         # align to parquet row groups — single-row-group files need
-        # operators/spread.spread_input instead. Derived from the SAME
+        # __spark_entry__._spread instead. Derived from the SAME
         # resolved core count as shuffle_partitions (review r6: the env
         # default would over-split scans on a local[4] test session).
         .config("spark.sql.files.minPartitionNum", str(shuffle_partitions))

@@ -318,9 +318,8 @@ def read_jsonld_lines(
 
 def jsonld_lines_plan(lines: DataFrame, context: dict | None = None) -> DataFrame:
     """The NDJSON-LD parse stage over any lines(file, value) DataFrame — a
-    pure stateless ``mapInPandas``, so it applies unchanged to a STREAMING
-    lines source (streaming/stream.read_jsonld_lines_stream), mirroring
-    the ntriples_from_lines / turtle_lines_plan split."""
+    pure stateless ``mapInPandas``, mirroring the ntriples_from_lines /
+    turtle_lines_plan split."""
     import hashlib
 
     import pandas as pd

@@ -62,15 +62,14 @@ def read_ntriples(spark: SparkSession, path: str) -> DataFrame:
 
 
 def ntriples_from_lines(lines: DataFrame, file_col: str | None = None) -> DataFrame:
-    """The N-Triples parse plan over any lines DataFrame. Two branches
-    (both legal on a STREAMING source, streaming/stream.
-    read_ntriples_stream): lines WITHOUT ``\\uXXXX``/``\\UXXXXXXXX``
-    escapes — the overwhelming majority — parse through pure column
-    expressions (JVM, no Python); lines carrying UCHAR escapes (classic
-    ASCII-clean dumps; Jena still emits them) route through a small
-    Python decoder, because codepoint conversion is not expressible in
-    Catalyst (review r5 — they used to read back with the six literal
-    characters, silently diverging from the Turtle reader). When
+    """The N-Triples parse plan over any lines DataFrame. Two branches:
+    lines WITHOUT ``\\uXXXX``/``\\UXXXXXXXX`` escapes — the overwhelming
+    majority — parse through pure column expressions (JVM, no Python);
+    lines carrying UCHAR escapes (classic ASCII-clean dumps; Jena still
+    emits them) route through a small Python decoder, because codepoint
+    conversion is not expressible in Catalyst (review r5 — they used to
+    read back with the six literal characters, silently diverging from
+    the Turtle reader). When
     ``file_col`` names a provenance column, explicit ``_:label`` bnodes
     are namespaced per file (md5-64 of the column value, matching
     :func:`_bnode_seed`); without it labels are carried verbatim
@@ -712,10 +711,8 @@ def _expand_col(name: str, bit: int, prefixes: dict[str, str]):
 def turtle_lines_plan(lines: DataFrame, mode: str) -> DataFrame:
     """The statement-per-line parse stage over any (file, value) lines
     DataFrame -> tagged frame ('p' prefix rows / 't' triple rows with
-    pn_mask markers). STATELESS (no collect, no checkpoint), so it applies
-    unchanged to a STREAMING lines source (streaming/stream.
-    read_turtle_lines_stream) — the same reuse shape as
-    :func:`ntriples_from_lines`."""
+    pn_mask markers). STATELESS (no collect, no checkpoint) — the same
+    reuse shape as :func:`ntriples_from_lines`."""
     import pandas as pd
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1131,7 +1128,7 @@ class _RdfXmlParser:
     """RDF/XML subset parser on stdlib ``xml.parsers.expat`` — the second
     front-door format the reference accepts via rdflib ``guess_format``
     (src/utils.py:58-63); real ontology distributions ship ``.rdf/.owl``
-    RDF/XML alongside Turtle. From-scratch streaming SAX design (no DOM:
+    RDF/XML alongside Turtle. From-scratch event-driven SAX design (no DOM:
     a 1 GB .owl never materializes a tree), original to this engine.
 
     Supported (the shapes OWL/SPHN-style ontologies actually use):

@@ -38,17 +38,27 @@ def _union_find_components(edges: list[tuple[str, str]]) -> dict[str, str]:
 
 
 def test_cc_matches_union_find_both_paths(spark, corpus):
-    edges_df = corpus["alias_edges"]
-    exp = _union_find_components([(r["src_id"], r["dst_id"]) for r in edges_df.collect()])
-    # driver fast path (default for small graphs)
-    got_d = {r["id"]: r["component"] for r in connected_components(edges_df).collect()}
-    assert got_d == exp
-    # distributed large-star/small-star path (forced)
-    got_s = {
-        r["id"]: r["component"]
-        for r in connected_components(edges_df, driver_threshold=0).collect()
-    }
-    assert got_s == exp
+    # (edges, driver_threshold that forces the distributed path). The
+    # second input repeats a few edges (self-loops included) far past the
+    # head-collect cap of 2*8+1 rows although its symmetrized-distinct set
+    # (9 rows) is under 2*8: the raw-row cap alone routes it distributed.
+    dup_heavy = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("d", "d"), ("e", "f"), ("f", "f"), ("g", "g")] * 20,
+        schema=schemas.ALIAS_EDGES,
+    )
+    for edges_df, small in ((corpus["alias_edges"], 0), (dup_heavy, 8)):
+        exp = _union_find_components(
+            [(r["src_id"], r["dst_id"]) for r in edges_df.collect()]
+        )
+        # driver fast path (default for small graphs)
+        got_d = {r["id"]: r["component"] for r in connected_components(edges_df).collect()}
+        assert got_d == exp
+        # distributed large-star/small-star path (forced)
+        got_s = {
+            r["id"]: r["component"]
+            for r in connected_components(edges_df, driver_threshold=small).collect()
+        }
+        assert got_s == exp
 
 
 def test_cc_long_chain_distributed(spark):

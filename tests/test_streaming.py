@@ -1,82 +1,37 @@
-"""Structured-Streaming front-end: availableNow foreachBatch sink emits the
-same triple set as the batch pipeline (stateless plan => exactly-once by
-idempotency), plus the watermarked windowed counter."""
+"""The three line parse stages (``ntriples_from_lines``, ``turtle_lines_plan``,
+``jsonld_lines_plan``) are stateless and scope blank nodes per file, so they
+accept any lines(file, value) DataFrame. Driving them from a
+``readStream.text`` source that delivers one file per micro-batch must give
+exactly the batch reader's rows: a collect, checkpoint or cross-file state
+inside a stage fails the query or changes the rows."""
 
-import pytest
 from pyspark.sql import functions as F
 
-from rdf_i2b2_converter_spark.operators.emit import emit_triples
-from rdf_i2b2_converter_spark.operators.mentions import detect_mentions, link_mentions
-from rdf_i2b2_converter_spark.streaming.stream import crawl_rate, read_pages_stream, run_stream_to_sink
 
-
-@pytest.fixture(scope="module")
-def pages_dir(spark, corpus, tmp_path_factory):
-    d = str(tmp_path_factory.mktemp("pages_parquet"))
-    corpus["pages"].repartition(3).write.mode("overwrite").parquet(d)
-    return d
-
-
-def test_stream_sink_matches_batch(spark, corpus, pages_dir, tmp_path):
-    sink = str(tmp_path / "s_sink")
-    ckpt = str(tmp_path / "s_ckpt")
-    run_stream_to_sink(spark, pages_dir, corpus["gazetteer"], sink, ckpt)
-    streamed = spark.read.parquet(f"{sink}/triples")
-
-    pages = spark.read.parquet(pages_dir)
-    m = detect_mentions(pages, corpus["gazetteer"])
-    linked = link_mentions(m, corpus["gazetteer"], pages.select("url", "lang"))
-    batch = emit_triples(linked)
-
-    hs = streamed.agg(F.bit_xor(F.xxhash64("subj", "pred", "obj"))).collect()[0][0]
-    hb = batch.agg(F.bit_xor(F.xxhash64("subj", "pred", "obj"))).collect()[0][0]
-    assert streamed.count() == batch.count()
-    assert hs == hb
-
-
-def test_windowed_crawl_rate(spark, corpus, pages_dir, tmp_path):
-    stream = read_pages_stream(spark, pages_dir)
-    agg = crawl_rate(stream, "1 hour", "1 hour")
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("rates")
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .trigger(availableNow=True)
-        .start()
+def _lines_stream(spark, path):
+    return (
+        spark.readStream.option("maxFilesPerTrigger", 1)
+        .text(path)
+        .select(F.input_file_name().alias("file"), "value")
     )
-    q.awaitTermination()
-    rows = spark.sql("SELECT * FROM rates").collect()
-    assert sum(r["n_pages"] for r in rows) == corpus["n"]
-    assert {r["lang"] for r in rows} == {"en", "de", "fr", "es", "zh"}
 
 
-def test_stream_sink_replay_is_idempotent(spark, corpus, pages_dir, tmp_path):
-    """ADVICE r1: a replayed micro-batch (failure between the parquet write
-    and the checkpoint commit) must not duplicate rows. Fresh checkpoint +
-    same sink re-delivers every micro-batch with the same epoch ids; the
-    dynamic-partition-overwrite sink rewrites them identically, where a
-    mode('append') sink would double the row count."""
-
-    def content_hash(df):
-        return df.agg(F.bit_xor(F.xxhash64("subj", "pred", "obj"))).collect()[0][0]
-
-    sink = str(tmp_path / "r_sink")
-    run_stream_to_sink(spark, pages_dir, corpus["gazetteer"], sink, str(tmp_path / "r_ck1"))
-    first = spark.read.parquet(f"{sink}/triples")
-    n1, h1 = first.count(), content_hash(first)
-
-    run_stream_to_sink(spark, pages_dir, corpus["gazetteer"], sink, str(tmp_path / "r_ck2"))
-    replayed = spark.read.parquet(f"{sink}/triples")
-    assert (replayed.count(), content_hash(replayed)) == (n1, h1)
+def _drain(parsed, tmp_path, tag):
+    out = str(tmp_path / f"{tag}_out")
+    q = (
+        parsed.writeStream.trigger(availableNow=True)
+        .option("checkpointLocation", str(tmp_path / f"{tag}_ckpt"))
+        .format("parquet")
+        .start(out)
+    )
+    q.awaitTermination(120)
+    return {tuple(r) for r in parsed.sparkSession.read.parquet(out).collect()}
 
 
 def test_streaming_ntriples_source_matches_batch(spark, tmp_path):
-    """Streaming A1: the readStream.text N-Triples source parses each
-    micro-batch to exactly the batch reader's rows (same expression plan),
-    across multiple dropped files."""
-    from rdf_i2b2_converter_spark.sources.rdf import read_ntriples
-    from rdf_i2b2_converter_spark.streaming.stream import read_ntriples_stream
+    """The N-Triples expression plan parses each micro-batch to exactly the
+    batch reader's rows, across multiple dropped files."""
+    from rdf_i2b2_converter_spark.sources.rdf import ntriples_from_lines, read_ntriples
 
     drop = tmp_path / "nt_drop"
     drop.mkdir()
@@ -88,27 +43,23 @@ def test_streaming_ntriples_source_matches_batch(spark, tmp_path):
     (drop / "b.nt").write_text(
         '_:b1 <http://e/num> "42"^^<http://www.w3.org/2001/XMLSchema#integer> .\n'
     )
-    out = str(tmp_path / "nt_out")
-    ckpt = str(tmp_path / "nt_ckpt")
-    q = (
-        read_ntriples_stream(spark, str(drop), max_files_per_trigger=1)
-        .writeStream.trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .format("parquet")
-        .start(out)
-    )
-    q.awaitTermination(120)
-    streamed = {tuple(r) for r in spark.read.parquet(out).collect()}
+    parsed = ntriples_from_lines(_lines_stream(spark, str(drop)), file_col="file")
+    streamed = _drain(parsed, tmp_path, "nt")
     batch = {tuple(r) for r in read_ntriples(spark, str(drop)).collect()}
     assert streamed == batch and len(batch) == 3
 
 
 def test_streaming_turtle_lines_source_matches_batch(spark, tmp_path):
-    """VERDICT r3 #8: the readStream turtle-lines source parses each
-    micro-batch to exactly the batch line reader's rows (same stateless
-    parse stage + static-prefix Catalyst expansion), across files."""
-    from rdf_i2b2_converter_spark.sources.rdf import read_turtle, turtle_prefixes
-    from rdf_i2b2_converter_spark.streaming.stream import read_turtle_lines_stream
+    """The statement-per-line Turtle stage parses each micro-batch to exactly
+    the batch line reader's rows, both compact and with a static prefix
+    table expanded Catalyst-side."""
+    from rdf_i2b2_converter_spark.sources.rdf import (
+        _TRIPLE_COLS,
+        _expand_col,
+        read_turtle,
+        turtle_lines_plan,
+        turtle_prefixes,
+    )
 
     drop = tmp_path / "ttl_drop"
     drop.mkdir()
@@ -127,17 +78,21 @@ def test_streaming_turtle_lines_source_matches_batch(spark, tmp_path):
     pfx = turtle_prefixes(spark, str(drop))
     for prefixes in (pfx, None):
         tag = "exp" if prefixes else "cmp"
-        out = str(tmp_path / f"ttl_out_{tag}")
-        ckpt = str(tmp_path / f"ttl_ckpt_{tag}")
-        q = (
-            read_turtle_lines_stream(spark, str(drop), prefixes=prefixes, max_files_per_trigger=1)
-            .writeStream.trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .format("parquet")
-            .start(out)
+        parsed = turtle_lines_plan(
+            _lines_stream(spark, str(drop)), "defer" if prefixes else "compact"
         )
-        q.awaitTermination(120)
-        streamed = {tuple(r) for r in spark.read.parquet(out).collect()}
+        triples = parsed.filter(F.col("kind") == "t")
+        if prefixes:
+            triples = triples.select(
+                _expand_col("s", 1, prefixes),
+                _expand_col("p", 2, prefixes),
+                _expand_col("o", 4, prefixes),
+                _expand_col("o_datatype", 8, prefixes),
+                F.col("o_lang"),
+            )
+        else:
+            triples = triples.select(*_TRIPLE_COLS)
+        streamed = _drain(triples, tmp_path, f"ttl_{tag}")
         batch = {
             tuple(r)
             for r in read_turtle(
@@ -148,11 +103,10 @@ def test_streaming_turtle_lines_source_matches_batch(spark, tmp_path):
 
 
 def test_streaming_jsonld_lines_source_matches_batch(spark, tmp_path):
-    """Streaming A1 for NDJSON-LD (r5): the readStream.text source parses
-    each micro-batch to exactly the batch reader's rows (same mapInPandas
-    stage, same static context, same per-file bnode scoping)."""
-    from rdf_i2b2_converter_spark.sources.jsonld import read_jsonld_lines
-    from rdf_i2b2_converter_spark.streaming.stream import read_jsonld_lines_stream
+    """The NDJSON-LD mapInPandas stage parses each micro-batch to exactly the
+    batch reader's rows (same static context, same per-file bnode
+    scoping)."""
+    from rdf_i2b2_converter_spark.sources.jsonld import jsonld_lines_plan, read_jsonld_lines
 
     ctx = {"ex": "http://e/", "knows": {"@id": "ex:knows", "@type": "@id"}}
     drop = tmp_path / "jl_drop"
@@ -165,16 +119,7 @@ def test_streaming_jsonld_lines_source_matches_batch(spark, tmp_path):
     (drop / "b.jsonl").write_text(
         '{"@id": "ex:b", "ex:age": 36, "ex:pet": {"ex:name": "Mog"}}\n'
     )
-    out = str(tmp_path / "jl_out")
-    ckpt = str(tmp_path / "jl_ckpt")
-    q = (
-        read_jsonld_lines_stream(spark, str(drop), context=ctx, max_files_per_trigger=1)
-        .writeStream.trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .format("parquet")
-        .start(out)
-    )
-    q.awaitTermination(120)
-    streamed = {tuple(r) for r in spark.read.parquet(out).collect()}
+    parsed = jsonld_lines_plan(_lines_stream(spark, str(drop)), ctx)
+    streamed = _drain(parsed, tmp_path, "jl")
     batch = {tuple(r) for r in read_jsonld_lines(spark, str(drop), context=ctx).collect()}
     assert streamed == batch and len(batch) >= 6
